@@ -719,3 +719,100 @@ def test_u32_timestamp_boundaries_roundtrip(spark, tmp_path):
             .collect()
         )
         assert ts_vals == sorted(int(t) for t in ts_list), name
+
+
+def test_isin_filters_on_metric_and_archive(spark, fixtures):
+    """`metric IN (...)` and `archive IN (...)` arrive at pushFilters as
+    ``In`` filters: the scan returns the right rows and the planner keeps
+    only the listed files and archives."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.datasource import In
+
+    from whisper_pandas_spark.sources.whisper import WhisperScanReader, register_whisper
+
+    register_whisper(spark)
+    d, _ = fixtures
+    path = str(d / "sensors")
+    df = spark.read.format("whisper").option("to_datetime", "false").load(path)
+    want = [r for r in df.collect() if r.metric == "temp" and r.archive in (0, 2)]
+    got = df.filter(F.col("metric").isin("temp", "nope") & F.col("archive").isin(0, 2))
+    assert want and sorted(map(tuple, got.collect())) == sorted(map(tuple, want))
+
+    reader = WhisperScanReader({"path": path})
+    pushed = [In(("metric",), ("temp", "nope")), In(("archive",), (0, 2))]
+    assert list(reader.pushFilters(pushed)) == []
+    parts = reader.partitions()
+    assert {p.path for p in parts} == {str(d / "sensors" / "temp.wsp")}
+    assert {p.archive_index for p in parts} == {0, 2}
+
+
+@pytest.mark.parametrize("server", ["srv*", "srv00?", "srv00[12]"])
+def test_glob_metric_names_cut_at_first_magic_component(tmp_path, server):
+    """The metric base is the directory above the first glob component,
+    whichever glob character (``*``, ``?``, ``[...]``) it uses."""
+    from whisper_pandas_spark.sources.whisper import WhisperScanReader
+
+    for s in ("srv001", "srv002"):
+        (tmp_path / s).mkdir()
+        build_wsp(str(tmp_path / s / "cpu.wsp"), archives=[(10, 16, 1.0)])
+    reader = WhisperScanReader({"path": str(tmp_path / server / "cpu.wsp")})
+    assert {p.metric for p in reader.partitions()} == {"srv001.cpu", "srv002.cpu"}
+
+
+def test_nothing_matches_per_caller(spark, tmp_path):
+    """Each caller's answer to a load path that names no Whisper file: the
+    batch scan and fetch raise, the stream plans an empty micro-batch, and
+    meta raises for a path that matches nothing but returns an empty frame
+    for an empty directory."""
+    from whisper_pandas_spark.sources.fetch import fetch
+    from whisper_pandas_spark.sources.meta import archive_meta, file_meta, scan_headers
+    from whisper_pandas_spark.sources.whisper import WhisperScanReader, register_whisper
+    from whisper_pandas_spark.streaming.source import WhisperStreamReader
+
+    register_whisper(spark)
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    unmatched = [str(tmp_path / "nope.wsp"), str(tmp_path / "srv*" / "*.wsp")]
+    for path in [str(empty), *unmatched]:
+        with pytest.raises(FileNotFoundError):
+            WhisperScanReader({"path": path}).partitions()
+        with pytest.raises(FileNotFoundError):
+            fetch(spark, path, END_TS - 100, END_TS)
+        stream = WhisperStreamReader({"path": path})
+        assert stream.latestOffset() == {"files": {}}
+        parts = stream.partitions({"files": {}}, {"files": {}})
+        assert [(p.path, p.slot_count) for p in parts] == [("", 0)]
+    with pytest.raises(Exception, match="no whisper files match"):
+        spark.read.format("whisper").load(str(empty)).collect()
+    for path in unmatched:
+        with pytest.raises(FileNotFoundError):
+            scan_headers(path)
+    assert file_meta(spark, str(empty)).count() == 0
+    assert archive_meta(spark, str(empty)).count() == 0
+
+
+def test_read_slots_matches_whole_file_decode(fixtures):
+    """The slot-range reader returns the same points as decoding the whole
+    file, for plain (byte-range) and gzip files, and reports truncation."""
+    from whisper_pandas_spark.sources.format import (
+        metric_name,
+        metric_path,
+        read_file_bytes,
+        read_header,
+        read_points,
+        read_slots,
+    )
+
+    d, _ = fixtures
+    for path in (str(d / "sensors" / "temp.wsp"), str(d / "gz.wsp.gz")):
+        info = read_header(path)
+        whole = read_file_bytes(path)
+        for arch in info.archives:
+            np.testing.assert_array_equal(
+                read_slots(path, arch, 7, 50), read_points(whole, arch, 7, 50)
+            )
+            np.testing.assert_array_equal(read_slots(path, arch), read_points(whole, arch))
+    trunc = str(d / "trunc.wsp")
+    with pytest.raises(ValueError, match="truncated"):
+        read_slots(trunc, read_header(trunc).archives[1])
+    assert metric_name(metric_path(str(d), "a.b.cpu"), str(d)) == "a.b.cpu"

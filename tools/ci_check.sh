@@ -5,6 +5,8 @@
 #
 #     sh tools/ci_check.sh
 #
+# 0. Whisper-store tests alone (format, scan, writer, stream source): a
+#    format regression fails here within minutes, before the full suite
 # 1. pytest suite
 # 2. oracle sweep at the driver-like local[8]/8-shuffle geometry
 # 3. oracle sweep at local[3]/3-shuffle (odd parallelism flushes out
@@ -16,6 +18,8 @@
 #    task #2)
 set -e
 cd "$(dirname "$0")/.."
+python -m pytest -q tests/test_whisper_source.py tests/test_whisper_write.py \
+    tests/test_streaming.py tests/test_reference_fixture.py
 python -m pytest tests/ -q
 python tools/oracle_check.py
 ORACLE_MASTER='local[3]' ORACLE_SHUFFLE=3 python tools/oracle_check.py

@@ -23,13 +23,10 @@ and selects the archive from the first file's header.
 
 from __future__ import annotations
 
-import glob as globmod
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.sources.format import read_header
+from whisper_pandas_spark.sources.format import list_tree, read_header
 
 
 def select_archive(path: str, span_seconds: int, compression: str = "infer") -> int:
@@ -62,23 +59,12 @@ def fetch(
     from whisper_pandas_spark.sources.whisper import register_whisper
 
     register_whisper(spark)
-    probe = path
-    if os.path.isdir(path):
-        hits = sorted(
-            globmod.glob(os.path.join(path, "**", "*.wsp"), recursive=True)
-            + globmod.glob(os.path.join(path, "**", "*.wsp.gz"), recursive=True)
-        )
-        if not hits:
-            raise FileNotFoundError(f"no whisper files under {path!r}")
-        probe = hits[0]
-    elif any(ch in path for ch in "*?["):
-        hits = sorted(globmod.glob(path))
-        if not hits:
-            raise FileNotFoundError(f"no whisper files match {path!r}")
-        probe = hits[0]
+    files = list_tree(path).files
+    if not files:
+        raise FileNotFoundError(f"no whisper files match {path!r}")
 
     anchor = until_epoch if now_epoch is None else now_epoch
-    idx = select_archive(probe, anchor - from_epoch, compression)
+    idx = select_archive(files[0], anchor - from_epoch, compression)
     df = spark.read.format("whisper").option("compression", compression).load(path)
     # plain column-vs-literal comparisons (timestamp_seconds of a literal
     # constant-folds), so BOTH predicates reach pushFilters — an

@@ -1,4 +1,4 @@
-"""Graphite WhisperDB on-disk format: header parsing and file metadata.
+"""Graphite WhisperDB on-disk format and tree layout: the one owner of both.
 
 Format (public spec:
 https://graphite.readthedocs.io/en/latest/whisper.html#database-format;
@@ -14,17 +14,21 @@ reference decoder semantics at ``/root/reference/whisper_pandas.py:20-42``):
 - archives form a ring buffer: physical slot order is write order modulo
   capacity, so chronological order requires a sort.
 
-This module is driver-side only (header peeks are a few dozen bytes per
-file); bulk point decode lives in the executor-side reader
-(:mod:`whisper_pandas_spark.sources.whisper`).
+The tree layout (:func:`list_tree`, :func:`metric_name`, :func:`metric_path`)
+and the slot-range read (:func:`read_slots`) live here too: the batch scan,
+stream source, ``fetch``, ``meta`` and writer share this one copy. Header
+peeks run on the driver, slot-range reads in scan tasks.
 """
 
 from __future__ import annotations
 
+import glob as globmod
 import gzip
 import os
 import struct
-from dataclasses import dataclass, field
+from collections.abc import Iterable
+from dataclasses import dataclass, field, replace
+from typing import NamedTuple
 
 import numpy as np
 
@@ -190,3 +194,86 @@ def read_file_bytes(path: str, compression: str = "infer") -> bytes:
     with open(path, "rb") as f:
         raw = f.read()
     return gzip.decompress(raw) if comp == "gzip" else raw
+
+
+def read_slots(
+    path: str,
+    archive: ArchiveInfo,
+    slot_start: int = 0,
+    slot_count: int | None = None,
+    compression: str = "infer",
+) -> np.ndarray:
+    """An archive slot range read from disk: a byte-range read for plain
+    files, a whole-file decompress for gzip (no random access)."""
+    if resolve_compression(path, compression) == "gzip":
+        return read_points(read_file_bytes(path, "gzip"), archive, slot_start, slot_count)
+    if slot_count is None:
+        slot_count = archive.points - slot_start
+    start = archive.offset + POINT_SIZE * slot_start
+    with open(path, "rb") as f:
+        f.seek(start)
+        raw = f.read(POINT_SIZE * slot_count)
+    # raw begins at byte `start` of the file: rebase the archive onto it
+    rebased = replace(archive, offset=archive.offset - start)
+    return read_points(raw, rebased, slot_start, slot_count)
+
+
+# -- tree layout: the files a load path names, and their metric names ------
+WSP_PATTERNS = ("*.wsp", "*.wsp.gz")
+
+
+class Tree(NamedTuple):
+    files: list[str]  # sorted, unique
+    base: str  # metric-name base directory
+
+
+def _glob_base(pattern: str) -> str:
+    """Directory above the first path component with glob magic (the
+    pattern's dirname when it has none)."""
+    parts = pattern.split(os.sep)
+    for i, part in enumerate(parts):
+        if any(ch in part for ch in "*?["):
+            return os.sep.join(parts[:i])
+    return os.path.dirname(pattern)
+
+
+def list_tree(paths: str | Iterable[str], strict: bool = False) -> Tree:
+    """Whisper files named by *paths* (directories recurse; anything else
+    is a non-recursive glob) and the common base for :func:`metric_name`.
+    Matching nothing is no error unless *strict*: then a non-directory path
+    that matches nothing raises ``FileNotFoundError``."""
+    if isinstance(paths, str):
+        paths = [paths]
+    files: list[str] = []
+    bases: list[str] = []
+    for path in paths:
+        if os.path.isdir(path):
+            for pat in WSP_PATTERNS:
+                files.extend(globmod.glob(os.path.join(path, "**", pat), recursive=True))
+            bases.append(path)
+        else:
+            hits = globmod.glob(path)
+            if strict and not hits:
+                raise FileNotFoundError(f"no whisper files match {path!r}")
+            files.extend(hits)
+            bases.append(_glob_base(path))
+    return Tree(sorted(set(files)), os.path.commonpath(bases) if bases else "")
+
+
+def metric_name(path: str, base_dir: str | None) -> str:
+    """Graphite metric name from a file path: relative to *base_dir*,
+    extensions stripped, path separators → dots (``a/b/cpu.wsp`` →
+    ``a.b.cpu``)."""
+    p = path
+    if base_dir and p.startswith(base_dir.rstrip(os.sep) + os.sep):
+        p = p[len(base_dir.rstrip(os.sep)) + 1 :]
+    if p.endswith(".gz"):
+        p = p[: -len(".gz")]
+    if p.endswith(".wsp"):
+        p = p[: -len(".wsp")]
+    return p.strip(os.sep).replace(os.sep, ".")
+
+
+def metric_path(root: str, metric: str) -> str:
+    """Inverse of :func:`metric_name`: where *metric* lives under *root*."""
+    return os.path.join(root, metric.replace(".", os.sep) + ".wsp")

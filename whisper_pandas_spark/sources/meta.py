@@ -9,8 +9,6 @@ over a path DataFrame for millions of files.
 
 from __future__ import annotations
 
-import glob as globmod
-import os
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,7 +22,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from whisper_pandas_spark.sources.format import FileInfo, read_header
+from whisper_pandas_spark.sources.format import FileInfo, list_tree, read_header
 
 FILE_META_SCHEMA = StructType(
     [
@@ -53,25 +51,10 @@ ARCHIVE_META_SCHEMA = StructType(
 )
 
 
-def _expand(paths: str | Iterable[str]) -> list[str]:
-    if isinstance(paths, str):
-        paths = [paths]
-    out: list[str] = []
-    for p in paths:
-        if os.path.isdir(p):
-            out.extend(
-                f
-                for pat in ("*.wsp", "*.wsp.gz")
-                for f in globmod.glob(os.path.join(p, "**", pat), recursive=True)
-            )
-        else:
-            out.extend(globmod.glob(p) or [p])
-    return sorted(set(out))
-
-
 def scan_headers(paths: str | Iterable[str], compression: str = "infer") -> list[FileInfo]:
-    """Driver-side header peek for each matching file."""
-    return [read_header(f, compression) for f in _expand(paths)]
+    """Driver-side header peek for each matching file; a non-directory
+    path that matches nothing raises ``FileNotFoundError``."""
+    return [read_header(f, compression) for f in list_tree(paths, strict=True).files]
 
 
 def file_meta(

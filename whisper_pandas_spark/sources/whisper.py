@@ -4,14 +4,15 @@ Graphite WhisperDB files.
 Architecture (Spark-first; contrast with the reference's single-process
 whole-file-in-RAM decoder, ``/root/reference/whisper_pandas.py:244-275``):
 
-- **Driver**: globs the load path and peeks only headers (≤ 16+12·N bytes
-  per file, :func:`~whisper_pandas_spark.sources.format.read_header`), then
-  plans one input partition per (file, archive, slot-chunk). A directory of
-  .wsp files becomes ONE DataFrame with a ``metric`` column — the unit of
-  parallelism is the archive chunk, not the file, so a 100 TB tree of
-  metrics scans with full cluster width.
-- **Executors**: each partition slices its own byte range, decodes with a
-  zero-copy numpy structured view, applies scan-side pruning
+- **Driver**: lists the load paths (``format.list_tree``), peeks each
+  file's 16+12·N header bytes (``format.read_header``; gzip decompresses
+  only that prefix), then plans one input partition per (file, archive,
+  slot-chunk). A directory of .wsp files becomes ONE DataFrame with a
+  ``metric`` column — the unit of parallelism is the archive chunk, not
+  the file, so a 100 TB tree of metrics scans with full cluster width.
+- **Executors**: each partition reads its slot range (``format.read_slots``:
+  a byte range, or the whole file for gzip), decodes with a zero-copy
+  numpy structured view, applies scan-side pruning
   (``drop_time_zero``, pushed timestamp bounds), normalizes endianness
   once, and emits Arrow RecordBatches straight into the JVM.
 
@@ -39,7 +40,6 @@ position the reference keeps as the pandas row index
 
 from __future__ import annotations
 
-import glob as globmod
 import os
 from dataclasses import dataclass
 from struct import error as struct_error
@@ -72,9 +72,11 @@ from pyspark.sql.types import (
 
 from whisper_pandas_spark.sources.format import (
     ArchiveInfo,
-    read_file_bytes,
+    FileInfo,
+    list_tree,
+    metric_name,
     read_header,
-    read_points,
+    read_slots,
     resolve_compression,
 )
 
@@ -89,25 +91,20 @@ from whisper_pandas_spark.sources.format import (
 DEFAULT_CHUNK_POINTS = 512 * 1024
 
 
-def _boolopt(options, key: str, default: bool) -> bool:
+def bool_option(options, key: str, default: bool) -> bool:
     raw = options.get(key)
     if raw is None:
         return default
     return str(raw).strip().lower() in ("true", "1", "yes")
 
 
-def metric_name(path: str, base_dir: str | None) -> str:
-    """Graphite metric name from a file path: relative to *base_dir*,
-    extensions stripped, path separators → dots (``a/b/cpu.wsp`` →
-    ``a.b.cpu``)."""
-    p = path
-    if base_dir and p.startswith(base_dir.rstrip(os.sep) + os.sep):
-        p = p[len(base_dir.rstrip(os.sep)) + 1 :]
-    if p.endswith(".gz"):
-        p = p[: -len(".gz")]
-    if p.endswith(".wsp"):
-        p = p[: -len(".wsp")]
-    return p.strip(os.sep).replace(os.sep, ".")
+def _schema_options(options) -> tuple[bool, str]:
+    """(to_datetime, value dtype): the options that shape the schema."""
+    dtype = str(options.get("dtype") or "float64").lower()
+    if dtype not in ("float64", "double", "float32", "float"):
+        raise ValueError(f"Invalid dtype: {dtype!r} (float64 or float32)")
+    value_dtype = "float32" if dtype in ("float32", "float") else "float64"
+    return bool_option(options, "to_datetime", True), value_dtype
 
 
 @dataclass
@@ -132,6 +129,15 @@ class WhisperPartition(InputPartition):
     ts_lo: int | None = None
     ts_hi: int | None = None
 
+    @classmethod
+    def empty(cls) -> "WhisperPartition":
+        """No-rows sentinel: Spark calls read(None) on an empty partition
+        list, so a scan pruned to nothing plans this instead."""
+        return cls(
+            path="", compression="none", metric="", archive_index=0, offset=0,
+            seconds_per_point=0, points=0, slot_start=0, slot_count=0,
+        )
+
 
 class WhisperDataSource(DataSource):
     """Python DataSource: ``spark.read.format("whisper").load(glob)``."""
@@ -141,12 +147,9 @@ class WhisperDataSource(DataSource):
         return "whisper"
 
     def schema(self) -> StructType:
-        to_datetime = _boolopt(self.options, "to_datetime", True)
-        dtype = str(self.options.get("dtype") or "float64").lower()
-        if dtype not in ("float64", "double", "float32", "float"):
-            raise ValueError(f"Invalid dtype: {dtype!r} (float64 or float32)")
+        to_datetime, value_dtype = _schema_options(self.options)
         ts_type = TimestampType() if to_datetime else LongType()
-        val_type = DoubleType() if dtype in ("float64", "double") else FloatType()
+        val_type = FloatType() if value_dtype == "float32" else DoubleType()
         return StructType(
             [
                 StructField("metric", StringType(), False),
@@ -191,14 +194,11 @@ class WhisperScanReader(DataSourceReader):
             self.paths = [path]
         else:
             raise ValueError("whisper source requires a load path")
-        self.path = self.paths[0]
         self.compression = str(options.get("compression") or "infer")
         resolve_compression("x.wsp", self.compression)  # validate early
-        self.to_datetime = _boolopt(options, "to_datetime", True)
-        dtype = str(options.get("dtype") or "float64").lower()
-        self.value_dtype = "float32" if dtype in ("float32", "float") else "float64"
-        self.drop_time_zero = _boolopt(options, "drop_time_zero", True)
-        self.time_sort = _boolopt(options, "time_sort", True)
+        self.to_datetime, self.value_dtype = _schema_options(options)
+        self.drop_time_zero = bool_option(options, "drop_time_zero", True)
+        self.time_sort = bool_option(options, "time_sort", True)
         # None → adaptive at plan time (see partitions()); explicit option
         # pins it (the right call on a real cluster, where driver cores say
         # nothing about executor count).
@@ -271,7 +271,7 @@ class WhisperScanReader(DataSourceReader):
             if isinstance(f, EqualTo) and attr == "metric":
                 self._metric_eq = _narrow(self._metric_eq, {f.value})
             elif isinstance(f, In) and attr == "metric":
-                self._metric_eq = _narrow(self._metric_eq, set(f.values))
+                self._metric_eq = _narrow(self._metric_eq, set(f.value))
             elif isinstance(f, StringStartsWith) and attr == "metric":
                 self._metric_like.append(("prefix", str(f.value)))
             elif isinstance(f, StringEndsWith) and attr == "metric":
@@ -281,7 +281,7 @@ class WhisperScanReader(DataSourceReader):
             elif isinstance(f, EqualTo) and attr == "archive":
                 self._archive_eq = _narrow(self._archive_eq, {int(f.value)})
             elif isinstance(f, In) and attr == "archive":
-                self._archive_eq = _narrow(self._archive_eq, {int(v) for v in f.values})
+                self._archive_eq = _narrow(self._archive_eq, {int(v) for v in f.value})
             elif attr == "timestamp" and isinstance(
                 f, (GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual)
             ):
@@ -303,32 +303,16 @@ class WhisperScanReader(DataSourceReader):
                 yield f
 
     # -- planning (driver) ------------------------------------------------
-    def _files(self) -> list[str]:
-        files: list[str] = []
-        bases: list[str] = []
-        for path in self.paths:
-            if os.path.isdir(path):
-                pats = [
-                    os.path.join(path, "**", "*.wsp"),
-                    os.path.join(path, "**", "*.wsp.gz"),
-                ]
-                files.extend(f for pat in pats for f in globmod.glob(pat, recursive=True))
-                bases.append(path)
-            else:
-                files.extend(globmod.glob(path))
-                bases.append(os.path.dirname(path.split("*")[0]))
-        # metric derivation base: common prefix of all contributing bases
-        self._base = os.path.commonpath(bases) if bases else ""
+    def partitions(self) -> list[WhisperPartition]:
+        files, base = list_tree(self.paths)
         if not files:
             raise FileNotFoundError(f"no whisper files match {self.paths!r}")
-        return sorted(set(files))
-
-    def partitions(self) -> list[WhisperPartition]:
+        if self.base_dir is not None:
+            base = self.base_dir
         # Survivors of metric pruning, with headers read once.
-        planned: list[tuple[str, str, "FileInfo"]] = []
-        base = self.base_dir
-        for f in self._files():
-            metric = metric_name(f, base if base is not None else self._base)
+        planned: list[tuple[str, str, FileInfo]] = []
+        for f in files:
+            metric = metric_name(f, base)
             if self._metric_eq is not None and metric not in self._metric_eq:
                 continue
             if not all(
@@ -392,18 +376,8 @@ class WhisperScanReader(DataSourceReader):
                             slot_count=min(chunk, arch.points - start),
                         )
                     )
-        if not parts:
-            # every partition pruned (e.g. metric filter matched nothing):
-            # Spark invokes read(None) when the list is empty, so plan one
-            # explicit empty sentinel instead
-            parts.append(
-                WhisperPartition(
-                    path="", compression="none", metric="", archive_index=0,
-                    offset=0, seconds_per_point=0, points=0,
-                    slot_start=0, slot_count=0,
-                )
-            )
-        return parts
+        # every partition pruned (e.g. metric filter matched nothing)
+        return parts or [WhisperPartition.empty()]
 
     # -- scan (executors) --------------------------------------------------
     def read(self, partition: WhisperPartition):
@@ -414,22 +388,8 @@ class WhisperScanReader(DataSourceReader):
         if not p.path:  # the pruned-to-nothing sentinel: no rows
             return
         try:
-            if p.compression == "gzip":
-                buffer = read_file_bytes(p.path, "gzip")
-                arch = ArchiveInfo(
-                    p.archive_index, p.offset, p.seconds_per_point, p.points
-                )
-                data = read_points(buffer, arch, p.slot_start, p.slot_count)
-            else:
-                # Byte-range read: only this partition's slice leaves the disk.
-                with open(p.path, "rb") as fh:
-                    fh.seek(p.offset + 12 * p.slot_start)
-                    raw = fh.read(12 * p.slot_count)
-                buffer = raw
-                arch = ArchiveInfo(
-                    p.archive_index, 0, p.seconds_per_point, p.slot_count
-                )
-                data = read_points(buffer, arch, 0, p.slot_count)
+            arch = ArchiveInfo(p.archive_index, p.offset, p.seconds_per_point, p.points)
+            data = read_slots(p.path, arch, p.slot_start, p.slot_count, p.compression)
         except (ValueError, OSError, struct_error) as exc:
             # Header parsed at plan time but the DATA section is short or
             # unreadable (half-written file). skip: this partition yields

@@ -36,7 +36,17 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from whisper_pandas_spark.sources.format import AGGREGATION_METHODS
+from whisper_pandas_spark.sources.format import (
+    AGGREGATION_METHODS,
+    ARCHIVE_HEADER,
+    FILE_HEADER,
+    POINT_DTYPE,
+    POINT_SIZE,
+    metric_path,
+    parse_header,
+    read_points,
+)
+from whisper_pandas_spark.sources.whisper import bool_option, register_whisper
 
 # method name -> numpy reducer over (ts, vals) of one coarse window
 _AGG_IDS = {name: i for i, name in AGGREGATION_METHODS.items()}
@@ -99,8 +109,6 @@ def build_wsp_bytes(
     buckets the new points touch), so a bucket whose finer points partially
     expired may be refreshed from the surviving ones.
     """
-    import struct
-
     import numpy as np
 
     if aggregation not in _AGG_IDS:
@@ -114,8 +122,6 @@ def build_wsp_bytes(
 
     old_arch: list[tuple] | None = None
     if existing is not None:
-        from whisper_pandas_spark.sources.format import parse_header, read_points
-
         info = parse_header(existing, "<existing>")
         if [(a.seconds_per_point, a.points) for a in info.archives] != [
             (spp, pts) for spp, pts in archives
@@ -134,19 +140,18 @@ def build_wsp_bytes(
                 )
             )
 
-    header_size = 16 + 12 * len(archives)
-    offsets, off = [], header_size
+    offsets, off = [], FILE_HEADER.size + ARCHIVE_HEADER.size * len(archives)
     for _spp, pts in archives:
         offsets.append(off)
-        off += 12 * pts
+        off += POINT_SIZE * pts
     buf = bytearray(off)
     max_retention = max(spp * pts for spp, pts in archives)
-    struct.pack_into(
-        ">LLfL", buf, 0, _AGG_IDS[aggregation], max_retention,
-        x_files_factor, len(archives),
+    FILE_HEADER.pack_into(
+        buf, 0, _AGG_IDS[aggregation], max_retention, x_files_factor, len(archives)
     )
     for i, (spp, pts) in enumerate(archives):
-        struct.pack_into(">LLL", buf, 16 + 12 * i, offsets[i], spp, pts)
+        at = FILE_HEADER.size + ARCHIVE_HEADER.size * i
+        ARCHIVE_HEADER.pack_into(buf, at, offsets[i], spp, pts)
 
     newest = int(ts[-1]) if len(ts) else 0
     if old_arch is not None and len(old_arch[0][0]):
@@ -201,11 +206,11 @@ def build_wsp_bytes(
         keep = a_ts > newest - spp * pts
         a_ts, a_vals = a_ts[keep], a_vals[keep]
 
-        arch = np.zeros(pts, dtype=[("ts", ">u4"), ("val", ">f8")])
+        arch = np.zeros(pts, dtype=POINT_DTYPE)
         slots = (a_ts // spp) % pts
-        arch["ts"][slots] = a_ts
-        arch["val"][slots] = a_vals
-        buf[offsets[i] : offsets[i] + 12 * pts] = arch.tobytes()
+        arch["timestamp"][slots] = a_ts
+        arch["value"][slots] = a_vals
+        buf[offsets[i] : offsets[i] + POINT_SIZE * pts] = arch.tobytes()
 
         fine_ts, fine_vals = a_ts, a_vals
         prev_spp = spp
@@ -239,11 +244,7 @@ class WhisperWriter(DataSourceArrowWriter):
                 f"invalid aggregation {self.aggregation!r}; one of {sorted(_AGG_IDS)}"
             )
         self.xff = float(options.get("x_files_factor") or 0.5)
-        self.merge = str(options.get("merge") or "false").strip().lower() in (
-            "true",
-            "1",
-            "yes",
-        )
+        self.merge = bool_option(options, "merge", False)
 
     def write(self, iterator) -> _Commit:
         import numpy as np
@@ -283,8 +284,7 @@ class WhisperWriter(DataSourceArrowWriter):
 
         written = []
         for metric, chunks in by_metric.items():
-            rel = metric.replace(".", os.sep) + ".wsp"
-            path = os.path.join(self.out_dir, rel)
+            path = metric_path(self.out_dir, metric)
             existing = None
             if self.merge and os.path.exists(path):
                 with open(path, "rb") as f:
@@ -339,8 +339,6 @@ def write_whisper(
     streaming sink's micro-batches). Default is the plain rebuild, which
     assumes each write carries a metric's complete window.
     """
-    from whisper_pandas_spark.sources.whisper import register_whisper
-
     register_whisper(df.sparkSession)
     (
         df.select("metric", "timestamp", "value")

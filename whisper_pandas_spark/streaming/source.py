@@ -15,16 +15,18 @@ Architecture (``DataSourceStreamReader`` — the DISTRIBUTED variant):
   flush cadences/resolutions: under a single global mark, a file whose
   series lags the tree-wide max would have its new points arrive below
   the watermark and be silently pruned. ``latestOffset`` peeks each
-  file's newest stored timestamp on the driver, with an mtime cache so
-  only files modified since the last trigger are rescanned. (Offset
-  JSON is O(files); at ~10⁶ files the checkpoint row is ~100 MB —
-  beyond that, shard the tree across multiple streams by prefix.)
+  file's newest stored timestamp on the driver (header + archive 0 only),
+  with an mtime cache so only files modified since the last trigger are
+  rescanned. (Offset JSON is O(files); at ~10⁶ files the checkpoint row
+  is ~100 MB — beyond that, shard the tree across multiple streams by
+  prefix.)
 - **Partitions** for a micro-batch reuse the batch scan's planning —
   one task per (file, archive-0, slot-chunk) with the batch's
   ``wm_start < ts <= wm_end`` window carried IN the partition;
-  executors do the byte-range decode and apply the window pre-Arrow.
-  The driver never touches point data for planning (headers + changed-
-  file peeks only), so a wide tree streams with cluster parallelism.
+  executors do the batch scan's slot-range decode and apply the window
+  pre-Arrow. The driver never touches point data for planning (headers +
+  changed-file peeks only), so a wide tree streams with cluster
+  parallelism.
 - **Replay** is deterministic for any committed offset range because
   stored points are keyed by timestamp (``partitions(start, end)`` is a
   pure function of the offsets and the ring contents above the
@@ -39,34 +41,18 @@ safe: expired points only ever disappear below the watermark.
 
 from __future__ import annotations
 
-import glob as globmod
 import os
 from typing import Iterator, Sequence, Tuple
 
-from pyspark.sql.datasource import DataSourceStreamReader, InputPartition
+from pyspark.sql.datasource import DataSourceStreamReader, EqualTo, InputPartition
 
-from whisper_pandas_spark.sources.format import (
-    read_file_bytes,
-    read_header,
-    read_points,
-)
-
-
-def _files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(
-            globmod.glob(os.path.join(path, "**", "*.wsp"), recursive=True)
-            + globmod.glob(os.path.join(path, "**", "*.wsp.gz"), recursive=True)
-        )
-    return sorted(globmod.glob(path))
+from whisper_pandas_spark.sources.format import list_tree, read_header, read_slots
 
 
 def _file_max_ts(path: str) -> int:
     """Newest stored timestamp in the file's finest archive (0 if empty)."""
     info = read_header(path)
-    buf = read_file_bytes(path, info.compression)
-    data = read_points(buf, info.archives[0])
-    ts = data["timestamp"]
+    ts = read_slots(path, info.archives[0], compression=info.compression)["timestamp"]
     return int(ts.max()) if len(ts) else 0
 
 
@@ -106,7 +92,7 @@ class WhisperStreamReader(DataSourceStreamReader):
 
         skip = str(self.options.get("on_error") or "fail").lower() == "skip"
         marks: dict[str, int] = {}
-        for f in _files(self.path):
+        for f in list_tree(self.path).files:
             try:
                 mtime = os.stat(f).st_mtime
                 cached = self._peek.get(f)
@@ -166,7 +152,7 @@ class WhisperStreamReader(DataSourceStreamReader):
 
         lo_of, hi_of = self._mark_fn(start), self._mark_fn(end)
         planner = WhisperScanReader(self.options)
-        planner._archive_eq = {0}
+        list(planner.pushFilters([EqualTo(("archive",), 0)]))
         parts = []
         try:
             planned = planner.partitions()
@@ -191,13 +177,7 @@ class WhisperStreamReader(DataSourceStreamReader):
             p.ts_lo = lo + 1
             p.ts_hi = hi
             parts.append(p)
-        return parts or [
-            WhisperPartition(
-                path="", compression="none", metric="", archive_index=0,
-                offset=0, seconds_per_point=0, points=0,
-                slot_start=0, slot_count=0,
-            )
-        ]
+        return parts or [WhisperPartition.empty()]
 
     # -- scan (executors) ---------------------------------------------------
     def read(self, partition: InputPartition) -> Iterator[Tuple]:
