@@ -386,6 +386,51 @@ def test_whisper_stream_source_multi_file(spark, tmp_path):
         q.stop()
 
 
+def test_stream_packs_files_with_different_windows(spark, tmp_path):
+    """Two files whose micro-batch windows differ share one scan task;
+    each range carries its own file's window, so each file emits exactly
+    its delta."""
+    from whisper_pandas_spark.sources.whisper import WhisperScanReader
+    from whisper_pandas_spark.sources.whisper_write import write_whisper
+    from whisper_pandas_spark.streaming.source import WhisperStreamReader
+
+    d = str(tmp_path / "tree")
+    base = 1_599_999_960
+
+    def pts(metric, lo, hi):
+        return spark.createDataFrame(
+            [(metric, base + 10 * i, float(i)) for i in range(lo, hi)],
+            ["metric", "epoch", "value"],
+        ).select(
+            "metric", F.timestamp_seconds("epoch").alias("timestamp"), "value"
+        )
+
+    write_whisper(pts("srv.fast", 0, 30), d, archives="10:200", merge=True)
+    write_whisper(pts("srv.slow", 0, 10), d, archives="10:200", merge=True)
+    opts = {"path": d, "base_dir": d, "to_datetime": "false"}
+    stream = WhisperStreamReader(opts)
+    off1 = stream.latestOffset()
+    write_whisper(pts("srv.fast", 30, 35), d, archives="10:200", merge=True)
+    write_whisper(pts("srv.slow", 10, 20), d, archives="10:200", merge=True)
+    off2 = stream.latestOffset()
+
+    [task] = stream.partitions(off1, off2)
+    windows = {r.metric: (r.ts_lo, r.ts_hi) for r in task.ranges}
+    assert windows == {
+        "srv.fast": (base + 10 * 29 + 1, base + 10 * 34),
+        "srv.slow": (base + 10 * 9 + 1, base + 10 * 19),
+    }
+    reader = WhisperScanReader(opts)
+    got = sorted(
+        (m, t)
+        for batch in reader.read(task)
+        for m, t in zip(batch.column("metric").to_pylist(), batch.column("timestamp").to_pylist())
+    )
+    want = [("srv.fast", base + 10 * i) for i in range(30, 35)]
+    want += [("srv.slow", base + 10 * i) for i in range(10, 20)]
+    assert got == want
+
+
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     """Watermarked stream-stream interval join: the streamed result must
     equal the same operator applied to the batch frames (including the
@@ -611,8 +656,8 @@ def test_stream_offsets_carry_mark_through_transient_error(spark, tmp_path):
     write_whisper(batch(0, 25), str(d), archives="10:200,60:50", merge=True)
     off4 = reader.latestOffset()
     assert off4["files"][f] == base + 10 * 24
-    delta = [p for p in reader.partitions(off2, off4) if p.path]
-    assert delta and all(p.ts_lo == mark + 1 for p in delta)
+    delta = [r for p in reader.partitions(off2, off4) for r in p.ranges]
+    assert delta and all(r.ts_lo == mark + 1 for r in delta)
 
 
 def test_stream_near_dup_replay_matches_batch(spark, sf_dir):

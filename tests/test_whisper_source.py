@@ -299,19 +299,29 @@ def test_read_whisper_total_sort(spark, fixtures):
 
 def test_metric_filter_prunes_partitions(spark, fixtures):
     """metric equality must prune at PARTITION PLANNING time (driver skips
-    whole files), not merely mask rows: the planned partition count drops."""
+    whole files), not merely mask rows: Spark pushes the filter and the
+    planner plans only the matching file's ranges."""
     from pyspark.sql import functions as F
+    from pyspark.sql.datasource import EqualTo
+
+    from whisper_pandas_spark.plans.inspect import formatted_plan
+    from whisper_pandas_spark.sources.whisper import WhisperScanReader
 
     d, _ = fixtures
     path = str(d / "sensors")
-    full = spark.read.format("whisper").load(path)
     pruned = spark.read.format("whisper").load(path).filter(
         F.col("metric") == "temp"
     )
-    n_full = full.rdd.getNumPartitions()
-    n_pruned = pruned.rdd.getNumPartitions()
-    assert n_pruned < n_full  # one of two files planned
+    pushed = [ln for ln in formatted_plan(pruned).splitlines() if "PushedFilters" in ln]
+    assert "EqualTo(metric,temp)" in pushed[0]
     assert {r["metric"] for r in pruned.select("metric").distinct().collect()} == {"temp"}
+
+    full, _ = WhisperScanReader({"path": path}).plan_ranges()
+    assert {r.path for r in full} == {str(d / "sensors" / f) for f in ("temp.wsp", "hum.wsp")}
+    reader = WhisperScanReader({"path": path})
+    assert list(reader.pushFilters([EqualTo(("metric",), "temp")])) == []
+    ranges, _ = reader.plan_ranges()
+    assert {r.path for r in ranges} == {str(d / "sensors" / "temp.wsp")}
 
 
 def test_fetch_selects_archive_and_pushes_bounds(spark, tmp_path):
@@ -371,14 +381,14 @@ def test_metric_prefix_pushdown_prunes_partitions(spark, fixtures):
     assert sorted(map(tuple, got)) == sorted(map(tuple, expected))
     assert {r["metric"] for r in got} == {"sensors.temp"}
 
-    # planner-level proof: the reader plans no partitions for hum.wsp
+    # planner-level proof: the reader plans no ranges for hum.wsp
     reader = WhisperScanReader({"path": path, "base_dir": str(d)})
     from pyspark.sql.datasource import StringStartsWith
 
     consumed = list(reader.pushFilters([StringStartsWith(("metric",), "sensors.temp")]))
     assert consumed == []  # filter fully consumed
-    parts = reader.partitions()
-    assert parts and all(p.metric == "sensors.temp" for p in parts)
+    ranges, _ = reader.plan_ranges()
+    assert ranges and all(r.metric == "sensors.temp" for r in ranges)
 
 
 def test_fully_pruned_scan_returns_empty(spark, fixtures):
@@ -741,9 +751,9 @@ def test_isin_filters_on_metric_and_archive(spark, fixtures):
     reader = WhisperScanReader({"path": path})
     pushed = [In(("metric",), ("temp", "nope")), In(("archive",), (0, 2))]
     assert list(reader.pushFilters(pushed)) == []
-    parts = reader.partitions()
-    assert {p.path for p in parts} == {str(d / "sensors" / "temp.wsp")}
-    assert {p.archive_index for p in parts} == {0, 2}
+    ranges, _ = reader.plan_ranges()
+    assert {r.path for r in ranges} == {str(d / "sensors" / "temp.wsp")}
+    assert {r.archive_index for r in ranges} == {0, 2}
 
 
 @pytest.mark.parametrize("server", ["srv*", "srv00?", "srv00[12]"])
@@ -756,7 +766,8 @@ def test_glob_metric_names_cut_at_first_magic_component(tmp_path, server):
         (tmp_path / s).mkdir()
         build_wsp(str(tmp_path / s / "cpu.wsp"), archives=[(10, 16, 1.0)])
     reader = WhisperScanReader({"path": str(tmp_path / server / "cpu.wsp")})
-    assert {p.metric for p in reader.partitions()} == {"srv001.cpu", "srv002.cpu"}
+    ranges, _ = reader.plan_ranges()
+    assert {r.metric for r in ranges} == {"srv001.cpu", "srv002.cpu"}
 
 
 def test_nothing_matches_per_caller(spark, tmp_path):
@@ -816,3 +827,267 @@ def test_read_slots_matches_whole_file_decode(fixtures):
     with pytest.raises(ValueError, match="truncated"):
         read_slots(trunc, read_header(trunc).archives[1])
     assert metric_name(metric_path(str(d), "a.b.cpu"), str(d)) == "a.b.cpu"
+
+
+def _metric_counts(reader, partitions):
+    """Rows per metric, read in-process task by task."""
+    counts: dict[str, int] = {}
+    for p in partitions:
+        for batch in reader.read(p):
+            for m in batch.column("metric").to_pylist():
+                counts[m] = counts.get(m, 0) + 1
+    return counts
+
+
+def test_packing_parity_on_small_file_tree(spark, tmp_path):
+    """Packing changes which task reads a slot range, never what the range
+    emits: a tree of 20 small ring-wrapped files, some gzip, collects the
+    same rows with one range per task (chunk_points=16) as with the
+    default packing, which reads the whole tree in one task."""
+    from whisper_pandas_spark.sources.whisper import WhisperScanReader, register_whisper
+
+    register_whisper(spark)
+    d = tmp_path / "tree"
+    filled = 0
+    for i in range(20):
+        sub = d / f"srv{i % 4}"
+        sub.mkdir(parents=True, exist_ok=True)
+        gz = i % 5 == 0
+        synth = build_wsp(
+            str(sub / (f"m{i}.wsp.gz" if gz else f"m{i}.wsp")),
+            archives=[(10, 32, 1.0), (60, 20, 0.5)],
+            seed=i,
+            gzip_out=gz,
+        )
+        filled += sum(len(a.filled) for a in synth)
+
+    def load(**opts):
+        reader = spark.read.format("whisper").option("to_datetime", "false")
+        for k, v in opts.items():
+            reader = reader.option(k, v)
+        df = reader.load(str(d))
+        return df, sorted(map(tuple, df.collect()))
+
+    one, want = load(chunk_points="16")
+    packed, got = load()
+    assert got == want and len(got) == filled
+    ranges, _ = WhisperScanReader({"path": str(d), "chunk_points": "16"}).plan_ranges()
+    assert one.rdd.getNumPartitions() == len(ranges)
+    assert packed.rdd.getNumPartitions() == 1
+
+
+def test_pack_respects_budget_and_order():
+    """Consecutive ranges share a task up to the slot budget; a range over
+    the budget is a task of its own; no ranges plan the empty sentinel."""
+    from whisper_pandas_spark.sources.whisper import SlotRange, pack
+
+    def rng(path, count):
+        return SlotRange(path, "none", path, 0, 28, 10, count, 0, count)
+
+    ranges = [rng("a", 6), rng("b", 4), rng("c", 1), rng("d", 30), rng("e", 2)]
+    tasks = pack(ranges, 10)
+    assert [[r.path for r in t.ranges] for t in tasks] == [["a", "b"], ["c"], ["d"], ["e"]]
+    assert [(t.path, t.slot_count) for t in tasks] == [("a", 10), ("c", 1), ("d", 30), ("e", 2)]
+    assert [(t.path, t.slot_count) for t in pack([], 10)] == [("", 0)]
+
+
+def test_on_error_skip_is_per_range_in_a_packed_task(tmp_path):
+    """A truncated range drops only its own rows: the ranges before and
+    after it in the same task still emit."""
+    from whisper_pandas_spark.sources.whisper import WhisperScanReader
+
+    d = tmp_path / "tree"
+    d.mkdir()
+    build_wsp(str(d / "a.wsp"), archives=[(10, 500, 1.0)])
+    # header = 16 + 12 bytes; the data section ends at slot 100
+    build_wsp(str(d / "b.wsp"), archives=[(10, 500, 1.0)], truncate_to=28 + 12 * 100)
+    build_wsp(str(d / "c.wsp"), archives=[(10, 500, 1.0)], seed=3)
+
+    reader = WhisperScanReader({"path": str(d), "on_error": "skip"})
+    [task] = reader.partitions()
+    assert [r.metric for r in task.ranges] == ["a", "b", "c"]
+    assert _metric_counts(reader, [task]) == {"a": 500, "c": 500}
+    with pytest.raises(ValueError, match="truncated"):
+        _metric_counts(WhisperScanReader({"path": str(d)}), [task])
+
+
+def test_gzip_file_decompressed_once_per_task(tmp_path, monkeypatch):
+    """The three archive ranges of one .wsp.gz file share a task, and the
+    task decompresses the file once for all three."""
+    from whisper_pandas_spark.sources import format as wsp_format
+    from whisper_pandas_spark.sources import whisper as wsp_source
+
+    path = str(tmp_path / "g.wsp.gz")
+    synth = build_wsp(path, gzip_out=True)
+    calls = []
+    real = wsp_format.read_file_bytes
+
+    def counting(*args, **kwargs):
+        calls.append(args[0])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(wsp_format, "read_file_bytes", counting)
+    monkeypatch.setattr(wsp_source, "read_file_bytes", counting)
+    reader = wsp_source.WhisperScanReader({"path": path})
+    [task] = reader.partitions()
+    assert [r.archive_index for r in task.ranges] == [0, 1, 2]
+    rows = sum(batch.num_rows for batch in reader.read(task))
+    assert calls == [path]
+    assert rows == sum(len(a.filled) for a in synth)
+
+
+def test_register_whisper_once_per_session(spark, fixtures, monkeypatch):
+    """Registering pickles the source class to the JVM: a session that has
+    it already is left alone, and a second session of the same context
+    registers its own copy once and reads with it."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from whisper_pandas_spark.sources.whisper import register_whisper
+
+    calls = []
+    real = DataSourceRegistration.register
+
+    def counting(self, source):
+        calls.append(self.sparkSession)
+        return real(self, source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting)
+    first, second = spark.newSession(), spark.newSession()
+    for s in (first, first, second, first, second):
+        register_whisper(s)
+    assert calls == [first, second]
+    d, _ = fixtures
+    assert second.read.format("whisper").load(str(d / "sensors")).count() > 0
+
+
+def _epochs(df):
+    return sorted((r.metric, int(r.timestamp.timestamp()), r.value) for r in df.collect())
+
+
+def test_fetch_reuses_relation_and_sees_new_files(spark, tmp_path):
+    """The second fetch of a path reuses the first one's loaded relation,
+    yet a file added between the two is read: each query plans afresh."""
+    from whisper_pandas_spark.sources import fetch as fetch_mod
+
+    d = tmp_path / "tree"
+    d.mkdir()
+    build_wsp(str(d / "a.wsp"))
+    lo, hi = END_TS - 300, END_TS
+    assert {m for m, _, _ in _epochs(fetch_mod.fetch(spark, str(d), lo, hi))} == {"a"}
+    loaded = fetch_mod._loaded[spark][(str(d), "infer")]
+
+    build_wsp(str(d / "b.wsp"), seed=3)
+    rows = _epochs(fetch_mod.fetch(spark, str(d), lo, hi))
+    assert fetch_mod._loaded[spark][(str(d), "infer")] is loaded
+    assert {m for m, _, _ in rows} == {"a", "b"} and len(rows) == 2 * 31
+
+
+def test_fetch_sees_merge_between_fetches(spark, tmp_path):
+    """A ``write_whisper(merge=True)`` into a fetched tree is visible to
+    the next fetch of the same path."""
+    from pyspark.sql import functions as F
+
+    from whisper_pandas_spark.sources.fetch import fetch
+    from whisper_pandas_spark.sources.whisper_write import write_whisper
+
+    d = str(tmp_path / "tree")
+    base = 1_599_999_960
+
+    def points(lo, hi):
+        return spark.createDataFrame(
+            [("srv.cpu", base + 10 * i, float(i)) for i in range(lo, hi)],
+            ["metric", "epoch", "value"],
+        ).select("metric", F.timestamp_seconds("epoch").alias("timestamp"), "value")
+
+    write_whisper(points(0, 10), d, archives="10:200", merge=True)
+    until = base + 10 * 30
+    assert _epochs(fetch(spark, d, base, until)) == [
+        ("srv.cpu", base + 10 * i, float(i)) for i in range(10)
+    ]
+    write_whisper(points(10, 20), d, archives="10:200", merge=True)
+    assert _epochs(fetch(spark, d, base, until)) == [
+        ("srv.cpu", base + 10 * i, float(i)) for i in range(20)
+    ]
+
+
+def test_fetch_relation_is_per_session_and_bounded(spark, tmp_path, monkeypatch):
+    """A new session loads its own relation instead of reusing another
+    session's; the cache holds sessions weakly and keeps at most
+    ``LOADED_PER_SESSION`` relations per session."""
+    import gc
+    import weakref
+
+    from whisper_pandas_spark.sources import fetch as fetch_mod
+
+    d = tmp_path / "tree"
+    d.mkdir()
+    build_wsp(str(d / "a.wsp"))
+    lo, hi = END_TS - 300, END_TS
+    want = _epochs(fetch_mod.fetch(spark, str(d), lo, hi))
+
+    other = spark.newSession()
+    got = fetch_mod.fetch(other, str(d), lo, hi)
+    assert got.sparkSession is other
+    assert got._jdf.sparkSession().equals(other._jsparkSession)
+    key = (str(d), "infer")
+    assert fetch_mod._loaded[other][key] is not fetch_mod._loaded[spark][key]
+    assert _epochs(got) == want
+
+    monkeypatch.setattr(fetch_mod, "LOADED_PER_SESSION", 2)
+    for name in ("x", "y", "z"):
+        (d / name).mkdir()
+        build_wsp(str(d / name / "m.wsp"))
+        fetch_mod.fetch(other, str(d / name), lo, hi)
+    assert list(fetch_mod._loaded[other]) == [(str(d / "y"), "infer"), (str(d / "z"), "infer")]
+
+    gone = weakref.ref(other)
+    del other, got
+    # pyspark's RDD.toDF closes over the newest session: move it on
+    spark.newSession()
+    gc.collect()
+    assert gone() is None
+
+
+def test_fetch_relation_cache_under_threads(spark, tmp_path, monkeypatch):
+    """Threads fetching from fresh sessions register the source once per
+    session and share its relation cache: paths that keep evicting each
+    other from a cache of 2 all return correct rows, and the cache stays
+    within its bound."""
+    import sys
+    import threading
+
+    from whisper_pandas_spark.sources import fetch as fetch_mod
+
+    monkeypatch.setattr(fetch_mod, "LOADED_PER_SESSION", 2)
+    paths = []
+    for name in ("p", "q", "r"):
+        (tmp_path / name).mkdir()
+        build_wsp(str(tmp_path / name / "m.wsp"))
+        paths.append(str(tmp_path / name))
+    lo, hi = END_TS - 300, END_TS
+    errors, counts = [], []
+
+    def work(session, k):
+        try:
+            for i in range(3):
+                df = fetch_mod.fetch(session, paths[(k + i) % 3], lo, hi)
+            counts.append(len(df.collect()))
+        except Exception as exc:  # reported below, not lost in the thread
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(4):
+            session = spark.newSession()
+            threads = [threading.Thread(target=work, args=(session, k)) for k in range(6)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+            assert not any(t.is_alive() for t in threads)
+            assert len(fetch_mod._loaded[session]) <= 2
+    finally:
+        sys.setswitchinterval(interval)
+    assert [str(e)[:300] for e in errors] == []
+    assert counts == [31] * 24

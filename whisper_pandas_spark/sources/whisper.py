@@ -6,15 +6,17 @@ whole-file-in-RAM decoder, ``/root/reference/whisper_pandas.py:244-275``):
 
 - **Driver**: lists the load paths (``format.list_tree``), peeks each
   file's 16+12·N header bytes (``format.read_header``; gzip decompresses
-  only that prefix), then plans one input partition per (file, archive,
-  slot-chunk). A directory of .wsp files becomes ONE DataFrame with a
-  ``metric`` column — the unit of parallelism is the archive chunk, not
-  the file, so a 100 TB tree of metrics scans with full cluster width.
-- **Executors**: each partition reads its slot range (``format.read_slots``:
-  a byte range, or the whole file for gzip), decodes with a zero-copy
-  numpy structured view, applies scan-side pruning
+  only that prefix), then plans slot ranges — one per (file, archive,
+  slot-chunk) — and packs consecutive ranges into scan tasks of up to
+  ``chunk_points`` slots. A directory of .wsp files becomes ONE DataFrame
+  with a ``metric`` column: a giant file splits across many tasks, and a
+  tree of small files shares few tasks (every task pays a fixed
+  Python-worker start-up that dwarfs a small file's decode).
+- **Executors**: each task reads its ranges in order (``format.read_slots``:
+  a byte range; a gzip file is decompressed once per task), decodes with a
+  zero-copy numpy structured view, applies scan-side pruning
   (``drop_time_zero``, pushed timestamp bounds), normalizes endianness
-  once, and emits Arrow RecordBatches straight into the JVM.
+  once, and emits one Arrow RecordBatch per range straight into the JVM.
 
 Options (names and defaults mirror the reference's ``to_frame`` /
 ``read`` flags, whisper_pandas.py:186-192, 245):
@@ -26,10 +28,10 @@ option               default    meaning
 ``dtype``            float64    value column type: ``float64`` or ``float32``
 ``to_datetime``      true       timestamp column as TIMESTAMP (UTC); false → LONG epoch seconds
 ``drop_time_zero``   true       drop never-filled ring slots (timestamp == 0)
-``time_sort``        true       chronological order within each archive partition
-``chunk_points``     adaptive   max slots per scan partition (archive splitting); default sizes the tree to ~2 tasks/core within [512K, 4M] — pin explicitly on a cluster
+``time_sort``        true       chronological order within each slot range (an archive, or one chunk of a split archive)
+``chunk_points``     adaptive   slot budget of one scan task: larger archives split into ranges of this size, smaller ranges pack together up to it; default sizes the tree to ~2 tasks/core within [512K, 4M] — pin explicitly on a cluster
 ``base_dir``         (glob)     prefix stripped when deriving ``metric`` from the path
-``on_error``         fail       ``skip`` drops unreadable files (plan time) and truncated data ranges (scan time) instead of failing the job — parquet's ``ignoreCorruptFiles`` contract
+``on_error``         fail       ``skip`` drops unreadable files (plan time) and truncated slot ranges (scan time, per range) instead of failing the job — parquet's ``ignoreCorruptFiles`` contract
 ===================  =========  ====================================================
 
 Output schema: ``metric STRING, archive INT, slot INT, timestamp
@@ -41,6 +43,8 @@ position the reference keeps as the pandas row index
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 from dataclasses import dataclass
 from struct import error as struct_error
 
@@ -75,7 +79,9 @@ from whisper_pandas_spark.sources.format import (
     FileInfo,
     list_tree,
     metric_name,
+    read_file_bytes,
     read_header,
+    read_points,
     read_slots,
     resolve_compression,
 )
@@ -107,14 +113,15 @@ def _schema_options(options) -> tuple[bool, str]:
     return bool_option(options, "to_datetime", True), value_dtype
 
 
-@dataclass
-class WhisperPartition(InputPartition):
-    """One scan task: a slot range of one archive of one file.
+@dataclass(frozen=True)
+class SlotRange:
+    """A slot range of one archive of one file: the unit the planner prunes
+    and splits.
 
-    ts_lo/ts_hi are OPTIONAL per-partition inclusive epoch bounds — the
-    streaming reader plans each micro-batch's window into its partitions
+    ts_lo/ts_hi are OPTIONAL per-range inclusive epoch bounds — the
+    streaming reader plans each file's micro-batch window into its ranges
     (executors apply them in the decode mask exactly like pushed
-    timestamp filters); batch partitions leave them None.
+    timestamp filters); batch ranges leave them None.
     """
 
     path: str
@@ -129,14 +136,39 @@ class WhisperPartition(InputPartition):
     ts_lo: int | None = None
     ts_hi: int | None = None
 
-    @classmethod
-    def empty(cls) -> "WhisperPartition":
-        """No-rows sentinel: Spark calls read(None) on an empty partition
-        list, so a scan pruned to nothing plans this instead."""
-        return cls(
-            path="", compression="none", metric="", archive_index=0, offset=0,
-            seconds_per_point=0, points=0, slot_start=0, slot_count=0,
-        )
+
+@dataclass
+class WhisperPartition(InputPartition):
+    """One scan task: consecutive slot ranges, in planning order. No ranges
+    is the no-rows sentinel (Spark calls read(None) on an empty partition
+    list, so a scan pruned to nothing plans this instead)."""
+
+    ranges: tuple[SlotRange, ...]
+
+    @property
+    def path(self) -> str:
+        """The first range's file ("" for the sentinel)."""
+        return self.ranges[0].path if self.ranges else ""
+
+    @property
+    def slot_count(self) -> int:
+        return sum(r.slot_count for r in self.ranges)
+
+
+def pack(ranges: list[SlotRange], budget: int) -> list[WhisperPartition]:
+    """Pack consecutive *ranges* into tasks of at most *budget* slots (a
+    range above the budget — a whole gzip archive — is a task of its own).
+    Every task costs a Python worker call whatever its size, so a tree of
+    small files should share few tasks."""
+    tasks: list[list[SlotRange]] = []
+    held = 0
+    for r in ranges:
+        if not tasks or held + r.slot_count > budget:
+            tasks.append([])
+            held = 0
+        tasks[-1].append(r)
+        held += r.slot_count
+    return [WhisperPartition(tuple(t)) for t in tasks] or [WhisperPartition(())]
 
 
 class WhisperDataSource(DataSource):
@@ -303,7 +335,9 @@ class WhisperScanReader(DataSourceReader):
                 yield f
 
     # -- planning (driver) ------------------------------------------------
-    def partitions(self) -> list[WhisperPartition]:
+    def plan_ranges(self) -> tuple[list[SlotRange], int]:
+        """The slot ranges the scan reads, after pruning, and the slot
+        budget of one task (``chunk_points``, or its adaptive default)."""
         files, base = list_tree(self.paths)
         if not files:
             raise FileNotFoundError(f"no whisper files match {self.paths!r}")
@@ -354,17 +388,17 @@ class WhisperScanReader(DataSourceReader):
             target = 2 * (os.cpu_count() or 8)
             chunk_points = min(max(total // max(target, 1), DEFAULT_CHUNK_POINTS), 4 * 1024 * 1024)
 
-        parts: list[WhisperPartition] = []
+        ranges: list[SlotRange] = []
         for f, metric, info in planned:
             for arch in info.archives:
                 if self._archive_eq is not None and arch.index not in self._archive_eq:
                     continue
-                # gzip has no random access: keep the archive whole so each
-                # partition decompresses the file at most once.
+                # gzip has no random access: keep the archive whole (the
+                # task decompresses the file once for all its ranges).
                 chunk = arch.points if info.compression == "gzip" else chunk_points
                 for start in range(0, arch.points, chunk):
-                    parts.append(
-                        WhisperPartition(
+                    ranges.append(
+                        SlotRange(
                             path=f,
                             compression=info.compression,
                             metric=metric,
@@ -376,46 +410,56 @@ class WhisperScanReader(DataSourceReader):
                             slot_count=min(chunk, arch.points - start),
                         )
                     )
-        # every partition pruned (e.g. metric filter matched nothing)
-        return parts or [WhisperPartition.empty()]
+        return ranges, chunk_points
+
+    def partitions(self) -> list[WhisperPartition]:
+        return pack(*self.plan_ranges())
 
     # -- scan (executors) --------------------------------------------------
     def read(self, partition: WhisperPartition):
+        gz_path, gz_bytes = "", b""  # the task's last decompressed gzip file
+        for r in partition.ranges:
+            arch = ArchiveInfo(r.archive_index, r.offset, r.seconds_per_point, r.points)
+            try:
+                if r.compression == "gzip":
+                    if r.path != gz_path:
+                        gz_path, gz_bytes = r.path, read_file_bytes(r.path, "gzip")
+                    data = read_points(gz_bytes, arch, r.slot_start, r.slot_count)
+                else:
+                    data = read_slots(r.path, arch, r.slot_start, r.slot_count, "none")
+            except (ValueError, OSError, struct_error) as exc:
+                # Header parsed at plan time but the DATA section is short or
+                # unreadable (half-written file). skip: this range yields
+                # nothing; the task's other ranges — and other tasks — are
+                # unaffected.
+                if self.on_error == "skip":
+                    import sys
+
+                    print(
+                        f"whisper: skipping unreadable range of {r.path}: {exc}",
+                        file=sys.stderr,
+                    )
+                    continue
+                raise
+            yield self._batch(r, data)
+
+    def _batch(self, r: SlotRange, data):
+        """One range's decoded points → an Arrow batch: masks, time sort."""
         import numpy as np
         import pyarrow as pa
 
-        p = partition
-        if not p.path:  # the pruned-to-nothing sentinel: no rows
-            return
-        try:
-            arch = ArchiveInfo(p.archive_index, p.offset, p.seconds_per_point, p.points)
-            data = read_slots(p.path, arch, p.slot_start, p.slot_count, p.compression)
-        except (ValueError, OSError, struct_error) as exc:
-            # Header parsed at plan time but the DATA section is short or
-            # unreadable (half-written file). skip: this partition yields
-            # nothing; other partitions — and other files — are unaffected.
-            if self.on_error == "skip":
-                import sys
-
-                print(
-                    f"whisper: skipping unreadable range of {p.path}: {exc}",
-                    file=sys.stderr,
-                )
-                return
-            raise
-
         ts = data["timestamp"].astype("int64")  # endianness + width normalize
-        slots = np.arange(p.slot_start, p.slot_start + p.slot_count, dtype="int32")
+        slots = np.arange(r.slot_start, r.slot_start + r.slot_count, dtype="int32")
 
         mask = None
         if self.drop_time_zero:
             mask = ts != 0
         lo = self._ts_lo
-        if p.ts_lo is not None:
-            lo = p.ts_lo if lo is None else max(lo, p.ts_lo)
+        if r.ts_lo is not None:
+            lo = r.ts_lo if lo is None else max(lo, r.ts_lo)
         hi = self._ts_hi
-        if p.ts_hi is not None:
-            hi = p.ts_hi if hi is None else min(hi, p.ts_hi)
+        if r.ts_hi is not None:
+            hi = r.ts_hi if hi is None else min(hi, r.ts_hi)
         if lo is not None:
             m = ts >= lo
             mask = m if mask is None else (mask & m)
@@ -439,12 +483,12 @@ class WhisperScanReader(DataSourceReader):
             ts_arr = pa.array(ts, type=pa.int64())
         val_type = pa.float32() if self.value_dtype == "float32" else pa.float64()
 
-        yield pa.RecordBatch.from_arrays(
+        return pa.RecordBatch.from_arrays(
             [
                 # C-level fill — a Python list of len(ts) identical strings
                 # costs ~100 ms per 1M-slot partition
-                pa.repeat(pa.scalar(p.metric, type=pa.string()), len(ts)),
-                pa.array(np.full(len(ts), p.archive_index, dtype="int32"), type=pa.int32()),
+                pa.repeat(pa.scalar(r.metric, type=pa.string()), len(ts)),
+                pa.array(np.full(len(ts), r.archive_index, dtype="int32"), type=pa.int32()),
                 pa.array(slots, type=pa.int32()),
                 ts_arr,
                 pa.array(vals, type=val_type),
@@ -453,13 +497,36 @@ class WhisperScanReader(DataSourceReader):
         )
 
 
+_REGISTERED: "weakref.WeakSet" = weakref.WeakSet()  # sessions the source is registered in
+_register_lock = threading.Lock()
+
+
 def register_whisper(spark) -> None:
-    """Register the source so ``spark.read.format("whisper")`` resolves.
+    """Register the source so ``spark.read.format("whisper")`` resolves;
+    once per session (each registration pickles the class to the JVM).
 
     Also enables Python-datasource filter pushdown on the session: Spark
     REFUSES to initialize a reader that overrides ``pushFilters`` while
     ``spark.sql.python.filterPushdown.enabled`` is false (the default), so
     a host session that didn't set it would fail on first read.
     """
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(WhisperDataSource)
+    with _register_lock:
+        if spark in _REGISTERED:
+            return
+        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+        # Spark checks the name against the ACTIVE session's sources too, so
+        # a second session of one SparkContext registering while the first
+        # is active fails with DATA_SOURCE_ALREADY_EXISTS (and so does a
+        # registration racing another one): register it as active, one at a
+        # time.
+        sessions = getattr(spark._jvm, "org.apache.spark.sql.classic.SparkSession")
+        active = sessions.getActiveSession()
+        sessions.setActiveSession(spark._jsparkSession)
+        try:
+            spark.dataSource.register(WhisperDataSource)
+        finally:
+            if active.isDefined():
+                sessions.setActiveSession(active.get())
+            else:
+                sessions.clearActiveSession()
+        _REGISTERED.add(spark)

@@ -21,12 +21,12 @@ Architecture (``DataSourceStreamReader`` — the DISTRIBUTED variant):
   is ~100 MB — beyond that, shard the tree across multiple streams by
   prefix.)
 - **Partitions** for a micro-batch reuse the batch scan's planning —
-  one task per (file, archive-0, slot-chunk) with the batch's
-  ``wm_start < ts <= wm_end`` window carried IN the partition;
-  executors do the batch scan's slot-range decode and apply the window
-  pre-Arrow. The driver never touches point data for planning (headers +
-  changed-file peeks only), so a wide tree streams with cluster
-  parallelism.
+  one slot range per (file, archive-0, slot-chunk), each carrying its
+  file's ``wm_start < ts <= wm_end`` window, packed into tasks like the
+  batch scan's; executors do the batch scan's slot-range decode and
+  apply each range's window pre-Arrow. The driver never touches point
+  data for planning (headers + changed-file peeks only), so a wide tree
+  streams with cluster parallelism.
 - **Replay** is deterministic for any committed offset range because
   stored points are keyed by timestamp (``partitions(start, end)`` is a
   pure function of the offsets and the ring contents above the
@@ -42,6 +42,7 @@ safe: expired points only ever disappear below the watermark.
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 from typing import Iterator, Sequence, Tuple
 
 from pyspark.sql.datasource import DataSourceStreamReader, EqualTo, InputPartition
@@ -145,17 +146,13 @@ class WhisperStreamReader(DataSourceStreamReader):
 
     # -- planning (driver) --------------------------------------------------
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        from whisper_pandas_spark.sources.whisper import (
-            WhisperPartition,
-            WhisperScanReader,
-        )
+        from whisper_pandas_spark.sources.whisper import WhisperScanReader, pack
 
         lo_of, hi_of = self._mark_fn(start), self._mark_fn(end)
         planner = WhisperScanReader(self.options)
         list(planner.pushFilters([EqualTo(("archive",), 0)]))
-        parts = []
         try:
-            planned = planner.partitions()
+            planned, budget = planner.plan_ranges()
         except FileNotFoundError:
             # A LIVE tree can be momentarily empty (rotation, rebuild:
             # rmtree-then-rewrite between two triggers). The batch scan
@@ -164,25 +161,23 @@ class WhisperStreamReader(DataSourceStreamReader):
             # pick the files up when they reappear (latestOffset already
             # reports {} for the same state; raising here killed the
             # query in exactly that window).
-            planned = []
-        for p in planned:
-            if not p.path:
-                continue
+            planned, budget = [], 0
+        ranges = []
+        for r in planned:
             # each file's micro-batch window is planned from ITS OWN
             # committed mark — a file lagging the tree-wide max still
-            # emits its new points (they'd sit below a global watermark)
-            lo, hi = lo_of(p.path), hi_of(p.path)
-            if hi <= lo:
-                continue
-            p.ts_lo = lo + 1
-            p.ts_hi = hi
-            parts.append(p)
-        return parts or [WhisperPartition.empty()]
+            # emits its new points (they'd sit below a global watermark).
+            # The window rides on the range: one task may hold files with
+            # different windows.
+            lo, hi = lo_of(r.path), hi_of(r.path)
+            if hi > lo:
+                ranges.append(replace(r, ts_lo=lo + 1, ts_hi=hi))
+        return pack(ranges, budget)
 
     # -- scan (executors) ---------------------------------------------------
     def read(self, partition: InputPartition) -> Iterator[Tuple]:
         # identical decode path to the batch scan; the micro-batch window
-        # rides in the partition and masks rows before Arrow
+        # rides on each range and masks rows before Arrow
         from whisper_pandas_spark.sources.whisper import WhisperScanReader
 
         reader = WhisperScanReader(self.options)
